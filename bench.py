@@ -3,12 +3,12 @@
 Runs the engine's headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
 /root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON
 line: {"metric": ..., "value": total_sec, "unit": "sec", "queries": {...},
-"sf": ...}.
+"sf": ...}.  ``$SPARK_GRAFT_CPUS`` defaults to every usable core.
 
 Also times the flagship web_pages constraint plan over a deterministically
 generated Common-Crawl-style table (the north-rule workload) and reports its
 docs/sec alongside the per-query seconds.  Scaling-efficiency evidence
-(local[8] vs local[32]) lives in tools/bench_scaling.py → BENCH/BASELINE.md.
+(local[C/4] vs local[C]) lives in tools/bench_scaling.py → BENCH/BASELINE.md.
 """
 
 from __future__ import annotations
@@ -21,7 +21,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 # 1M rows: the flagship projection runs ~1s+, long enough that docs/sec
 # measures throughput rather than scheduling noise
 WEB_ROWS = int(os.environ.get("SPARK_GRAFT_WEB_ROWS", "1000000"))

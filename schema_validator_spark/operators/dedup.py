@@ -17,7 +17,7 @@ from __future__ import annotations
 
 import itertools
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 
@@ -1088,15 +1088,18 @@ def near_dup_clusters(
                 ).alias("cluster_id"),
             )
         )
-        updated = _ckpt(updated)
         # Min-label propagation only ever LOWERS labels, so sum(cluster_id)
         # strictly decreases on any change — an unchanged sum IS convergence.
-        # One tiny scan of the just-checkpointed blocks replaces the former
-        # join-back + count job per iteration (VERDICT r3 minor).  decimal
-        # accumulator: immune to ANSI long-overflow at any node count.
-        cur = updated.agg(
-            F.sum(F.col("cluster_id").cast("decimal(38,0)"))
-        ).first()[0]
+        # The sum is observed during the checkpoint job itself, so testing
+        # convergence costs no job of its own.  decimal accumulator: immune
+        # to ANSI long-overflow at any node count.
+        obs = Observation()
+        updated = _ckpt(
+            updated.observe(
+                obs, F.sum(F.col("cluster_id").cast("decimal(38,0)")).alias("s")
+            )
+        )
+        cur = obs.get["s"]
         labels = updated
         if cur == prev_sum:
             break

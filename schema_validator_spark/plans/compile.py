@@ -16,7 +16,8 @@ Design notes (Spark-first, SURVEY.md §3-4):
   post-transform value; min/max silently dropped (string.rs:251-283 quirk).
 - User ``transform(fn)`` callables fuse with neighbouring built-ins into a
   SINGLE Arrow-vectorized pandas UDF per column (one JVM↔Python round trip,
-  never one per combinator).
+  never one per combinator), evaluated once per row in a staging projection
+  (``TransformStage``) that the checks read from.
 - Byte-length semantics: Rust ``String::len`` counts bytes → ``octet_length``.
 """
 
@@ -27,7 +28,7 @@ from dataclasses import dataclass
 from typing import Optional
 
 import pandas as pd
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -199,7 +200,13 @@ def _apply_native_transform(s: Column, t: Transform) -> Column:
 
 
 def _fused_pandas_transform(transforms: list[Transform], out_ddl: str):
-    """Fuse a whole transform chain into ONE pandas UDF (one Arrow hop)."""
+    """Fuse a whole transform chain into ONE pandas UDF (one Arrow hop).
+
+    Plans call it through ``TransformStage``: the chain runs once per value
+    in its own projection and every check reads the staged result — the
+    reference's contract (``TransformedSchema::validate`` applies the
+    closure once, then checks the pattern on its output, string.rs:251-283).
+    """
     steps = [(t.name, t.fn) for t in transforms]
 
     def run(series: pd.Series) -> pd.Series:
@@ -231,14 +238,63 @@ def _optional_pandas_transform(transforms: list[Transform], out_ddl: str):
     return F.pandas_udf(run, out_ddl)
 
 
-def _apply_transforms(s: Column, transforms: list[Transform], out_ddl: str) -> Column:
+class TransformStage:
+    """Stages a plan's Python transform calls in their own projections.
+
+    Inlined into the check expressions, a pandas-UDF call runs once per
+    Python eval operator that needs it, and a ``valid`` filter pushed below
+    the validation projection (``where(valid)``, ``violations()``) carries a
+    copy of it into a second operator.  Each call registered here becomes a
+    column ``_t_<field>`` of a projection under the validation projection,
+    and the field's value and checks read that column.  The call is marked
+    nondeterministic, so Spark neither copies it nor pushes a filter below
+    its projection: every transform chain runs exactly once per row per
+    job.  (Marking an inline call alone is not enough — a nondeterministic
+    call is evaluated once per reference.)
+    """
+
+    def __init__(self, taken: list[str]):
+        """``taken``: the input's column names, which no alias may reuse."""
+        self._taken = set(taken)
+        self._levels: list[list[Column]] = []
+        self._field_level: dict[str, int] = {}
+        self.aliases: list[str] = []
+
+    def __call__(self, name: str, udf, arg: Column) -> Column:
+        # a field's second call (an Option-mapping transform after the fused
+        # chain) reads the first one's output, so it runs one projection later
+        level = self._field_level.get(name, -1) + 1
+        self._field_level[name] = level
+        alias = f"_t_{name}"
+        while alias in self._taken:
+            alias = "_" + alias
+        self._taken.add(alias)
+        self.aliases.append(alias)
+        if level == len(self._levels):
+            self._levels.append([])
+        self._levels[level].append(udf.asNondeterministic()(arg).alias(alias))
+        return F.col(alias)
+
+    def apply(self, df: DataFrame) -> DataFrame:
+        for cols in self._levels:
+            df = df.select("*", *cols)
+        return df
+
+
+def _apply_transforms(
+    s: Column,
+    transforms: list[Transform],
+    out_ddl: str,
+    name: str,
+    stage: TransformStage,
+) -> Column:
     if not transforms:
         return s
     if builtins.all(t.name != "custom" for t in transforms):
         for t in transforms:
             s = _apply_native_transform(s, t)
         return s
-    return _fused_pandas_transform(transforms, out_ddl)(s)
+    return stage(name, _fused_pandas_transform(transforms, out_ddl), s)
 
 
 # ---------------------------------------------------------------------------
@@ -247,7 +303,11 @@ def _apply_transforms(s: Column, transforms: list[Transform], out_ddl: str) -> C
 
 
 def _compile_string(
-    sch: StringSchema, col: Column, name: str, src: T.DataType
+    sch: StringSchema,
+    col: Column,
+    name: str,
+    src: T.DataType,
+    stage: TransformStage,
 ) -> CompiledField:
     tn = spark_type_name(src)
     out_ddl = sch.inner_output_type
@@ -271,7 +331,7 @@ def _compile_string(
     if sch.has_transforms:
         # TransformedSchema quirk: transforms, then PATTERN ONLY
         # (string.rs:251-283); min/max silently dropped.
-        s = _apply_transforms(s, sch.transforms, out_ddl)
+        s = _apply_transforms(s, sch.transforms, out_ddl, name, stage)
         if sch.pattern_regex is not None and out_ddl == "string":
             code, msg = _override(
                 cfg,
@@ -338,7 +398,11 @@ def _rust_f64_parse(col: Column) -> Column:
 
 
 def _compile_number(
-    sch: NumberSchema, col: Column, name: str, src: T.DataType
+    sch: NumberSchema,
+    col: Column,
+    name: str,
+    src: T.DataType,
+    stage: TransformStage,
 ) -> CompiledField:
     tn = spark_type_name(src)
     cfg = sch.error_config
@@ -366,12 +430,16 @@ def _compile_number(
         code, msg = _override(cfg, E.TYPE_ERROR, E.type_error_message("Number", tn))
         return _const_field(name, "double", code, msg, "Type")
 
-    s = _apply_transforms(s, sch.transforms, "double")
+    s = _apply_transforms(s, sch.transforms, "double", name, stage)
     return _finish(name, col, s, checks, sch, "double")
 
 
 def _compile_boolean(
-    sch: BooleanSchema, col: Column, name: str, src: T.DataType
+    sch: BooleanSchema,
+    col: Column,
+    name: str,
+    src: T.DataType,
+    stage: TransformStage,
 ) -> CompiledField:
     tn = spark_type_name(src)
     cfg = sch.error_config
@@ -402,13 +470,15 @@ def _compile_boolean(
         code, msg = _override(cfg, E.TYPE_ERROR, E.type_error_message("Boolean", tn))
         return _const_field(name, "boolean", code, msg, "Type")
 
-    s = _apply_transforms(s, sch.transforms, "boolean")
+    if coerce_null_to_false:
+        # NULL is the value false, and goes through the transforms as such
+        s = F.when(col.isNull(), F.lit(False)).otherwise(s)
+    s = _apply_transforms(s, sch.transforms, "boolean", name, stage)
     cf = _finish(name, col, s, [], sch, "boolean")
     if coerce_null_to_false:
-        false_val = _apply_transforms(F.lit(False), sch.transforms, "boolean")
         cf = CompiledField(
             name,
-            F.when(col.isNull(), false_val).otherwise(cf.value),
+            F.when(col.isNull(), s).otherwise(cf.value),
             F.when(col.isNull(), _null_viol()).otherwise(cf.violation),
             "boolean",
             F.when(col.isNull(), F.lit(True)).otherwise(cf.passes),
@@ -420,7 +490,11 @@ _LIT_TYPE = {str: "String", bool: "Boolean", int: "Integer", float: "Float"}
 
 
 def _compile_literal(
-    sch: LiteralSchema, col: Column, name: str, src: T.DataType
+    sch: LiteralSchema,
+    col: Column,
+    name: str,
+    src: T.DataType,
+    stage: TransformStage,
 ) -> CompiledField:
     tn = spark_type_name(src)
     cfg = sch.error_config
@@ -511,12 +585,16 @@ def compile_field(
     col: Column,
     name: str,
     src: T.DataType,
+    stage: TransformStage,
     missing_cfg: Optional[ErrorConfig] = None,
 ) -> CompiledField:
+    """Compile one field.  Its Python transform calls are registered in
+    ``stage`` and the returned columns read their staged outputs, so
+    ``stage.apply`` must run on the input first."""
     fn = _COMPILERS.get(type(sch))
     if fn is None:
         raise TypeError(f"cannot compile schema kind {sch.kind!r}")
-    cf = fn(sch, col, name, src)
+    cf = fn(sch, col, name, src, stage)
     if sch.nullable:
         # Covers constant-violation fields too (e.g. optional string over a
         # long column): explicit NULL always passes (optional.rs:375-386).
@@ -549,7 +627,7 @@ def compile_field(
         udf = _optional_pandas_transform(sch.opt_transforms, out_ddl)
         cf = CompiledField(
             name,
-            F.when(cf.violation.isNull(), udf(cf.value)).otherwise(
+            F.when(cf.violation.isNull(), stage(name, udf, cf.value)).otherwise(
                 F.lit(None).cast(out_ddl)
             ),
             cf.violation,
@@ -560,7 +638,9 @@ def compile_field(
 
 
 def compile_object(
-    obj: ObjectSchema, df_schema: T.StructType
+    obj: ObjectSchema,
+    df_schema: T.StructType,
+    stage: TransformStage,
 ) -> list[CompiledField]:
     """Compile every field of an object schema against a DataFrame schema.
 
@@ -582,6 +662,8 @@ def compile_object(
             )
             continue
         out.append(
-            compile_field(sch, F.col(name), name, by_name[name], obj.error_config)
+            compile_field(
+                sch, F.col(name), name, by_name[name], stage, obj.error_config
+            )
         )
     return out

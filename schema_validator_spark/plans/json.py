@@ -36,6 +36,7 @@ from .. import errors as E
 from ..errors import ErrorConfig
 from ..plans.compile import (
     VIOLATION_DDL,
+    TransformStage,
     jvm_regex,
     _apply_transforms,
     _null_viol,
@@ -104,7 +105,7 @@ def _finish_json(name, sch, present, rt, value, checks, out_ddl, missing_cfg):
     return _JsonField(name, value, viol, out_ddl)
 
 
-def _compile_json_string(sch: StringSchema, name, present, rt, s_str, s_dbl, s_bool, missing_cfg):
+def _compile_json_string(sch: StringSchema, name, present, rt, s_str, s_dbl, s_bool, missing_cfg, stage):
     cfg = sch.error_config
     out_ddl = sch.inner_output_type
     checks = []
@@ -130,7 +131,7 @@ def _compile_json_string(sch: StringSchema, name, present, rt, s_str, s_dbl, s_b
     checks.append((bad_type, _viol(name, code, msg, "Type")))
 
     if sch.has_transforms:
-        s = _apply_transforms(s, sch.transforms, out_ddl)
+        s = _apply_transforms(s, sch.transforms, out_ddl, name, stage)
         if sch.pattern_regex is not None and out_ddl == "string":
             code, msg = _override(
                 cfg,
@@ -174,7 +175,7 @@ def _compile_json_string(sch: StringSchema, name, present, rt, s_str, s_dbl, s_b
     return _finish_json(name, sch, present, rt, s, checks, out_ddl, missing_cfg)
 
 
-def _compile_json_number(sch: NumberSchema, name, present, rt, s_str, s_dbl, s_bool, missing_cfg):
+def _compile_json_number(sch: NumberSchema, name, present, rt, s_str, s_dbl, s_bool, missing_cfg, stage):
     cfg = sch.error_config
     checks = []
     if sch.coerce:
@@ -200,11 +201,11 @@ def _compile_json_number(sch: NumberSchema, name, present, rt, s_str, s_dbl, s_b
             F.format_string("Type error: expected Number, got %s", rt),
         )
         checks.append((rt != "Float", _viol(name, code, msg, "Type")))
-    s = _apply_transforms(s, sch.transforms, "double")
+    s = _apply_transforms(s, sch.transforms, "double", name, stage)
     return _finish_json(name, sch, present, rt, s, checks, "double", missing_cfg)
 
 
-def _compile_json_boolean(sch: BooleanSchema, name, present, rt, s_str, s_dbl, s_bool, missing_cfg):
+def _compile_json_boolean(sch: BooleanSchema, name, present, rt, s_str, s_dbl, s_bool, missing_cfg, stage):
     cfg = sch.error_config
     checks = []
     if sch.coerce:
@@ -222,7 +223,7 @@ def _compile_json_boolean(sch: BooleanSchema, name, present, rt, s_str, s_dbl, s
             F.format_string("Type error: expected Boolean, got %s", rt),
         )
         checks.append((rt != "Boolean", _viol(name, code, msg, "Type")))
-    s = _apply_transforms(s, sch.transforms, "boolean")
+    s = _apply_transforms(s, sch.transforms, "boolean", name, stage)
     f = _finish_json(name, sch, present, rt, s, checks, "boolean", missing_cfg)
     if sch.coerce and not sch.nullable:
         # coercing boolean: json null is a VALUE (false), not a pass-through —
@@ -232,7 +233,7 @@ def _compile_json_boolean(sch: BooleanSchema, name, present, rt, s_str, s_dbl, s
     return f
 
 
-def _compile_json_literal(sch: LiteralSchema, name, present, rt, s_str, s_dbl, s_bool, missing_cfg):
+def _compile_json_literal(sch: LiteralSchema, name, present, rt, s_str, s_dbl, s_bool, missing_cfg, stage):
     cfg = sch.error_config
     expected_dbg = E.rust_debug(sch.value)
     out_ddl = sch.output_type
@@ -342,6 +343,9 @@ def validate_json_objects(
     )
     row_ok = row_viol.isNull()
 
+    # Python transforms run once per row in their own projection on top of
+    # the staged primitives; a pushed-down `valid` filter stops above it
+    stage = TransformStage(df.columns)
     fields: list[_JsonField] = []
     for name, sch in obj.fields.items():
         compiler = _JSON_COMPILERS.get(type(sch))
@@ -353,8 +357,9 @@ def validate_json_objects(
         s_dbl = F.col(f"_d_{name}")
         s_bool = F.col(f"_b_{name}")
         fields.append(
-            compiler(sch, name, present, rt, s_str, s_dbl, s_bool, obj.error_config)
+            compiler(sch, name, present, rt, s_str, s_dbl, s_bool, obj.error_config, stage)
         )
+    staged = stage.apply(staged)
 
     passthrough = [c for c in df.columns if c != json_col or keep_json]
     cols = [F.col(c) for c in passthrough]

@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from ..errors import OBJECT_ERROR
 from ..schema import BaseSchema, ObjectSchema
-from .compile import CompiledField, _null_viol, _viol, compile_field, compile_object
+from .compile import TransformStage, _null_viol, _viol, compile_field, compile_object
 
 VIOLATIONS_COL = "violations"
 VALID_COL = "valid"
@@ -39,15 +39,14 @@ class ValidationPlan:
         self.schema = obj
 
     # -- row-level ------------------------------------------------------
-    def _compiled(self, df: DataFrame) -> list[CompiledField]:
-        return compile_object(self.schema, df.schema)
-
     def apply(self, df: DataFrame, keep_original: bool = False) -> DataFrame:
-        """Validate + transform in one projection.
+        """Validate + transform in one projection (plus one staging
+        projection per level of Python transforms, see ``TransformStage``).
 
         ``keep_original=True`` keeps input columns as ``_raw_<name>`` next to
         the validated outputs (useful for violation triage)."""
-        fields = self._compiled(df)
+        stage = TransformStage(df.columns)
+        fields = compile_object(self.schema, df.schema, stage)
         field_names = {f.name for f in fields}
         passthrough = [c for c in df.columns if c not in field_names]
 
@@ -93,7 +92,7 @@ class ValidationPlan:
         for ok in check_passes:
             valid = valid & ok
         cols.append(valid.alias(VALID_COL))
-        return df.select(*cols)
+        return stage.apply(df).select(*cols)
 
     # -- derived outputs -------------------------------------------------
     def violations(
@@ -435,7 +434,10 @@ def _object_transform_udf(fn, return_type: str, mode: str):
 
     with warnings.catch_warnings():
         warnings.simplefilter("ignore", UserWarning)
-        return pandas_udf(_udf_fn, return_type, PandasUDFType.SCALAR)
+        udf = pandas_udf(_udf_fn, return_type, PandasUDFType.SCALAR)
+    # no filter on the output is pushed below the call, and it is never
+    # copied into a second Python eval: the transform runs once per row
+    return udf.asNondeterministic()
 
 
 def validate_column(
@@ -445,9 +447,10 @@ def validate_column(
     validate one column, appending ``<alias>`` value + ``violation`` struct."""
     alias = alias or column
     src = dict(zip(df.schema.names, [f.dataType for f in df.schema.fields]))[column]
-    cf = compile_field(sch, F.col(column), column, src)
-    return df.select(
+    stage = TransformStage(df.columns)
+    cf = compile_field(sch, F.col(column), column, src, stage)
+    return stage.apply(df).select(
         "*",
         cf.value.alias(f"{alias}_validated"),
         cf.violation.alias(f"{alias}_violation"),
-    )
+    ).drop(*stage.aliases)

@@ -1,9 +1,10 @@
 """SparkSession factory with the engine's scale-oriented defaults.
 
-Defaults target the sandbox (local[N], 32 cores) but every setting is the one
-you'd ship to a 1000-executor cluster: AQE on (post-shuffle coalescing,
-dynamic broadcast selection, skew-join splitting), Arrow enabled for the
-pandas-UDF stages, shuffle partitions sized to the parallelism.
+Defaults are sized from the machine (``local[<usable cores>]``, a driver
+heap of a quarter of physical memory) but every setting is the one you'd
+ship to a 1000-executor cluster: AQE on (post-shuffle coalescing, dynamic
+broadcast selection, skew-join splitting), Arrow enabled for the pandas-UDF
+stages, shuffle partitions sized to the parallelism.
 
 Two settings exist specifically because of how threaded JVMs behave under
 concurrency (measured on this box, tools/bench_scaling.py):
@@ -25,6 +26,18 @@ import os
 from pyspark.sql import SparkSession
 
 
+def box_cores() -> int:
+    """Cores this process may run on."""
+    return len(os.sched_getaffinity(0))
+
+
+def box_heap() -> str:
+    """Default driver heap: a quarter of physical memory, 1-16 GB.  The heap
+    is pre-touched at start-up, so it must leave the machine room to spare."""
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{max(1024, min(16384, phys_mb // 4))}m"
+
+
 def get_spark(
     app_name: str = "schema_validator_spark",
     cpus: int | None = None,
@@ -37,10 +50,18 @@ def get_spark(
     ``local-cluster[4,8,9216]`` for separate-JVM executors (the scaling
     bench's stand-in for real multi-executor isolation); ``executor_mem``
     then sizes each executor heap (pre-touched, same reasoning as the
-    driver heap)."""
-    cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    driver heap).  ``cpus`` and ``driver_mem`` default to
+    ``$SPARK_GRAFT_CPUS`` / ``$SPARK_DRIVER_MEM``, else to ``box_cores()`` /
+    ``box_heap()``.
+
+    PySpark's DataFrame debugging is off
+    (``spark.python.sql.dataFrameDebugging.enabled=false``): with it on,
+    every ``F.*`` call captures its Python call site and pays about six py4j
+    round trips, which dominates building a large validation plan.  The
+    price: PySpark call sites are dropped from DataFrame error contexts."""
+    cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS") or box_cores())
     shuffle_partitions = shuffle_partitions or max(cpus, 8)
-    driver_mem = driver_mem or os.environ.get("SPARK_DRIVER_MEM", "16g")
+    driver_mem = driver_mem or os.environ.get("SPARK_DRIVER_MEM") or box_heap()
     max_part = os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "64m")
     b = (
         SparkSession.builder.master(master or f"local[{cpus}]")
@@ -70,6 +91,7 @@ def get_spark(
             f"-Xms{driver_mem} -XX:+AlwaysPreTouch",
         )
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # SimplifyCaseConversionExpressions rewrites upper(lower(x)) →
         # upper(x), which is NOT semantics-preserving under Unicode
         # SpecialCasing (upper(lower('İ')) is 'I'+U+0307, upper('İ') is 'İ')

@@ -6,7 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from schema_validator_spark.plans.compile import compile_field
+from schema_validator_spark.plans.compile import TransformStage, compile_field
 
 _PY2SPARK = {
     str: T.StringType(),
@@ -29,9 +29,11 @@ def run_cases(spark, sch, values, spark_type=None):
         ]
     )
     df = spark.createDataFrame(list(enumerate(values)), schema=df_schema)
-    cf = compile_field(sch, F.col("v"), "v", spark_type)
+    stage = TransformStage(df.columns)
+    cf = compile_field(sch, F.col("v"), "v", spark_type, stage)
     rows = (
-        df.select("i", cf.value.alias("out"), cf.violation.alias("viol"))
+        stage.apply(df)
+        .select("i", cf.value.alias("out"), cf.violation.alias("viol"))
         .orderBy("i")
         .collect()
     )

@@ -148,3 +148,44 @@ def test_json_row_level_checks(spark):
     assert got[0] == (True, [])
     assert got[1] == (False, ["a_lt_b"])
     assert got[2] == (True, [])  # NULL comparison = pass
+
+
+def test_transform_runs_once_per_value_per_write(spark, tmp_path):
+    """TransformedSchema::validate runs the closure once per value
+    (string.rs:251-283): writing the valid rows and then the violations
+    calls it once per JSON string value in each write, although both writes
+    filter on `valid`."""
+    from schema_validator_spark import ValidationPlan
+
+    calls = spark.sparkContext.accumulator(0)
+
+    def capitalize(v):
+        calls.add(1)
+        return v.capitalize()
+
+    s = schema()
+    obj = (
+        s.object()
+        .field("user", s.string().transform(capitalize).pattern(r"^[A-Z][a-z]+$"))
+        .field("age", schema().coerce().number())
+    )
+    docs = [
+        '{"user":"bob","age":1}',
+        '{"user":"al1","age":2}',
+        '{"user":"eve","age":"x"}',
+        '{"user":7,"age":3}',
+        "not json",
+    ]
+    strings = 3
+    df = spark.createDataFrame(list(enumerate(docs)), "id long, j string")
+    out = validate_json_objects(df, "j", obj)
+    out.where(F.col("valid")).write.parquet(str(tmp_path / "valid"))
+    assert calls.value == strings
+    ValidationPlan(obj).violations(out, ["id"]).write.parquet(str(tmp_path / "violations"))
+    assert calls.value == 2 * strings
+    valid = spark.read.parquet(str(tmp_path / "valid")).collect()
+    assert [(r["id"], r["user"]) for r in valid] == [(0, "Bob")]
+    got = spark.read.parquet(str(tmp_path / "violations")).orderBy("id").collect()
+    assert [(r["id"], r["code"]) for r in got] == [
+        (1, "PATTERN_ERROR"), (2, "COERCION_ERROR"), (3, "TYPE_ERROR"), (4, "TYPE_ERROR"),
+    ]

@@ -254,6 +254,15 @@ def test_optional_with_transform(spark):
     assert_ok(r[1], False)
     assert_ok(r[2], None)
 
+    # a transform before .optional() and one after: the second maps the
+    # first one's output, and None
+    sch = s.string().transform(str.strip).optional().transform(
+        lambda v: len(v) if v is not None else -1, return_type="bigint"
+    )
+    r = run_cases(spark, sch, [" ab ", None])
+    assert_ok(r[0], 2)
+    assert_ok(r[1], -1)
+
 
 # -- object-level transform (TransformedObjectSchema, object.rs:189-199, 319-332)
 

@@ -228,3 +228,38 @@ def test_pattern_unicode_classes_match_rust_dialect(spark):
     # \w and \s follow too ((?U) switches the whole family)
     w = run_cases(spark, s.string().pattern(r"^\w+$"), ["héllo", "héllo!"])
     assert w[0][1] is None and w[1][1] is not None
+
+
+def test_transform_runs_once_per_value_per_write(spark, tmp_path):
+    # TransformedSchema::validate (string.rs:251-283) calls the closure once
+    # per value; writing the valid rows and then the violations, both of
+    # which filter on `valid`, must call it once per string value per write
+    from pyspark.sql import functions as F
+
+    from schema_validator_spark import ValidationPlan
+
+    calls = spark.sparkContext.accumulator(0)
+
+    def capitalize(v):
+        calls.add(1)
+        return v.capitalize()
+
+    s = schema()
+    plan = ValidationPlan(
+        s.object()
+        .field("user", s.string().transform(capitalize).pattern(r"^[A-Z][a-z]+$"))
+        .field("n", s.number())
+    )
+    rows = [(0, "bob", 1.0), (1, "al1", 2.0), (2, None, 3.0), (3, "eve", 4.0), (4, "tom", None)]
+    strings = 4
+    out = plan.apply(spark.createDataFrame(rows, "id long, user string, n double"))
+    out.where(F.col("valid")).write.parquet(str(tmp_path / "valid"))
+    assert calls.value == strings
+    plan.violations(out, ["id"]).write.parquet(str(tmp_path / "violations"))
+    assert calls.value == 2 * strings
+    valid = spark.read.parquet(str(tmp_path / "valid")).collect()
+    assert sorted((r["id"], r["user"]) for r in valid) == [(0, "Bob"), (3, "Eve")]
+    got = spark.read.parquet(str(tmp_path / "violations")).orderBy("id").collect()
+    assert [(r["id"], r["field"], r["code"]) for r in got] == [
+        (1, "user", "PATTERN_ERROR"), (2, "user", "MISSING_FIELD"), (4, "n", "MISSING_FIELD"),
+    ]

@@ -216,3 +216,45 @@ def test_shingle_chain_not_duplicated_into_filters(spark):
         for block in buf.getvalue().split("\n\n"):
             if block.lstrip().startswith("(") and ") Filter" in block.split("\n")[0]:
                 assert "regexp_replace" not in block, block.split("\n")[0]
+
+
+def test_python_transform_runs_once_under_valid_filters(spark):
+    """`where(valid)` and `violations()` push the `valid` filter below the
+    validation projection.  The Python transform must still be evaluated by
+    ONE Python operator with ONE UDF output, on both the JSON and the
+    tabular path, and the JSON parse must not be copied into the filter."""
+    import re
+
+    from schema_validator_spark import validate_json_objects
+    from schema_validator_spark.plans.inspect import plan_stats
+
+    s = schema()
+    obj = (
+        s.object()
+        .field("user", s.string().trim().transform(str.title).pattern(r"^[A-Z][a-z]+$"))
+        .field("age", schema().coerce().number())
+    )
+    plan = ValidationPlan(obj)
+    js = spark.createDataFrame([(1, '{"user":" bob ","age":3}')], "id long, j string")
+    tab = spark.createDataFrame([(1, " bob ", 3.0)], "id long, user string, age double")
+    for validated in (validate_json_objects(js, "j", obj), plan.apply(tab)):
+        for out in (validated.where(F.col("valid")), plan.violations(validated, ["id"])):
+            stats = plan_stats(out)
+            p = _plan(out)
+            assert stats["python_evals"] == 1 and stats["python_udfs"] == 1, p
+            for line in p.splitlines():
+                if re.match(r"[\s+\-:]*(\*\(\d+\) )?Filter ", line):
+                    assert "parseJson" not in line, line
+
+
+def test_plan_stats_counts_python_udf_outputs(spark):
+    # an inline nondeterministic call is evaluated once per reference, inside
+    # one operator: python_evals stays 1, python_udfs shows the repeats
+    from schema_validator_spark.plans.inspect import plan_stats
+
+    twice = F.pandas_udf(lambda v: v + 1, "long").asNondeterministic()
+    df = spark.range(4)
+    stats = plan_stats(df.select((twice("id") + twice("id")).alias("x")))
+    assert stats["python_evals"] == 1 and stats["python_udfs"] == 2
+    stats = plan_stats(df.select(F.pandas_udf(lambda v: v + 1, "long")("id")))
+    assert stats["python_evals"] == 1 and stats["python_udfs"] == 1

@@ -64,7 +64,7 @@ def build(spark):
 
 
 def main():
-    spark = get_spark(app_name="asof_skew_probe", cpus=32)
+    spark = get_spark(app_name="asof_skew_probe")
     spark.sparkContext.setLogLevel("ERROR")
     fact, dim = build(spark)
     slice_width = N_ROWS / 30.0

@@ -1,7 +1,8 @@
 """Scaling-efficiency benchmark (north rule: ≥0.8 efficiency from N → 4N).
 
-Sandbox stand-in for N vs 4N executors: the SAME job at ``local[8]`` and
-``local[32]`` over the SAME on-disk input, each level in its own subprocess
+Sandbox stand-in for N vs 4N executors: the SAME job at ``local[C/4]`` and
+``local[C]`` (C = the usable cores, or ``$SPARK_GRAFT_CPUS``) over the SAME
+on-disk input, each level in its own subprocess
 (fresh JVM).  Memory is held constant PER CORE (1 GiB/core), matching how a
 real cluster scales: 4N executors bring 4x the memory; giving both levels one
 fixed heap would starve the 4N level.
@@ -16,7 +17,7 @@ nothing.
 
 Writes BENCH/BASELINE.md with docs/sec at both levels + efficiency, plus a
 per-phase breakdown (the shuffle-bound dedup is the hardest phase to scale on
-a single box: all 32 threads share one L3 and memory bus, costs a real
+a single box: all C threads share one L3 and memory bus, costs a real
 cluster's 4N executors do not pay).
 
 Usage: python tools/bench_scaling.py [n_rows]
@@ -30,6 +31,11 @@ import subprocess
 import sys
 
 N_ROWS = int(sys.argv[1]) if len(sys.argv) > 1 else 24_000_000
+sys.path.insert(0, ".")
+from schema_validator_spark.session import box_cores
+
+HI = int(os.environ.get("SPARK_GRAFT_CPUS") or box_cores())
+LO = max(1, HI // 4)
 DATA = "/tmp/spark_graft_bench/web_pages"
 MARKER = os.path.join(os.path.dirname(DATA), f"rows_{N_ROWS}")
 REPEATS = 6
@@ -108,11 +114,10 @@ print(json.dumps({"cpus": cpus, "sec": round(best, 2)}))
 def _gen():
     if os.path.exists(MARKER) and os.path.exists(os.path.join(DATA, "_SUCCESS")):
         return
-    sys.path.insert(0, ".")
     from schema_validator_spark.session import get_spark
     from schema_validator_spark.sources.webpages import generate_web_pages
 
-    spark = get_spark(app_name="scaling-gen", cpus=32)
+    spark = get_spark(app_name="scaling-gen")
     generate_web_pages(spark, N_ROWS, num_partitions=128).write.mode(
         "overwrite"
     ).parquet(DATA)
@@ -141,21 +146,22 @@ def _lc_cfg(workers: int, cores: int) -> dict:
 
 def main():
     _gen()
-    lo = _run({"cpus": 8})
-    hi = _run({"cpus": 32})
+    lo = _run({"cpus": LO})
+    hi = _run({"cpus": HI})
     eff = hi["docs_per_sec"] / (4 * lo["docs_per_sec"])
     # hardware control: pure cache-resident ALU work (range + xxhash64 + sum),
     # no input scan, no strings, no shuffle — the best ANY job can scale on
     # this box, bounded by all-core clock scaling
-    clo = _run({"cpus": 8}, _CONTROL)
-    chi = _run({"cpus": 32}, _CONTROL)
+    clo = _run({"cpus": LO}, _CONTROL)
+    chi = _run({"cpus": HI}, _CONTROL)
     ctl_eff = clo["sec"] / (4 * chi["sec"])
     # separate-JVM executor datapoint (real multi-executor isolation): the
     # SAME job on a local-cluster master, N=1 executor vs 4N=4 executors with
     # identical per-executor cores+memory — the literal shape of the north
     # rule's "N and 4N executors" criterion.
     # 2-core executors: at 2→8 total cores the box's all-core clock penalty is
-    # smallest (pure-compute control ≈0.84 vs ≈0.70 at 8→32), so this pair
+    # smallest (pure-compute control ≈0.84 vs ≈0.70 at 8→32 on a 32-core
+    # host), so this pair
     # measures executor-scaling rather than silicon throttling
     lc_cores = int(os.environ.get("SPARK_GRAFT_LC_CORES", "2"))
     lc_lo = _run(_lc_cfg(1, lc_cores), repeats=4)
@@ -165,9 +171,9 @@ def main():
     lc_chi = _run(_lc_cfg(4, lc_cores), _CONTROL)
     lc_ctl_eff = lc_clo["sec"] / (4 * lc_chi["sec"])
     report = {
-        "local8": lo,
-        "local32": hi,
-        "scaling_efficiency_8_to_32": round(eff, 3),
+        f"local{LO}": lo,
+        f"local{HI}": hi,
+        f"scaling_efficiency_{LO}_to_{HI}": round(eff, 3),
         "control_pure_compute_efficiency": round(ctl_eff, 3),
         "normalized_vs_control": round(eff / ctl_eff, 3),
         "local_cluster_1x%d" % lc_cores: lc_lo,
@@ -218,8 +224,8 @@ partial aggregation).
 
 | config | rows | wall (s) | validated docs/sec |
 |---|---|---|---|
-| local[8]  (N)  | {lo["rows"]:,} | {lo["sec"]:.2f} | {lo["docs_per_sec"]:,.0f} |
-| local[32] (4N) | {hi["rows"]:,} | {hi["sec"]:.2f} | {hi["docs_per_sec"]:,.0f} |
+| local[{LO}]  (N)  | {lo["rows"]:,} | {lo["sec"]:.2f} | {lo["docs_per_sec"]:,.0f} |
+| local[{HI}] (4N) | {hi["rows"]:,} | {hi["sec"]:.2f} | {hi["docs_per_sec"]:,.0f} |
 
 **Scaling efficiency (N→4N) = {hi["docs_per_sec"]:,.0f} / (4 × {lo["docs_per_sec"]:,.0f})
 = {eff:.3f}** (target ≥ 0.8 on a real cluster).
@@ -227,7 +233,7 @@ partial aggregation).
 **Hardware control**: the identical comparison for a pure cache-resident
 compute job (`range → xxhash64 → sum`, no input, no strings, no shuffle)
 measures **{ctl_eff:.3f}** — the ceiling ANY Spark job can reach going
-8→32 threads on this box (all-core clock scaling + shared L3/memory bus on
+{LO}→{HI} threads on this box (all-core clock scaling + shared L3/memory bus on
 one socket).  Normalized against that achievable ceiling, the engine's
 workload scales at **{eff:.3f} / {ctl_eff:.3f} = {eff / ctl_eff:.3f}** —
 i.e. the constraint-validation pipeline loses essentially nothing beyond
@@ -237,7 +243,7 @@ the ≥0.8 criterion describes.
 
 Per-phase breakdown (best wall seconds, and per-phase efficiency):
 
-| phase | local[8] s | local[32] s | efficiency |
+| phase | local[{LO}] s | local[{HI}] s | efficiency |
 |---|---|---|---|
 {phase_rows}
 

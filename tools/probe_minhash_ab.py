@@ -68,7 +68,7 @@ def agg_minhash_pairs(docs, num_hashes=32, bands=8, threshold=0.5):
 def main():
     div = int(sys.argv[1]) if len(sys.argv) > 1 else 16
     mode = sys.argv[2] if len(sys.argv) > 2 else "both"
-    spark = get_spark(app_name="probe_mh_ab", cpus=32)
+    spark = get_spark(app_name="probe_mh_ab")
     big = spark.read.parquet("/tmp/spark_graft_bench/web_pages")
     docs = big.select(F.xxhash64("url", "warc_ts").alias("doc_id"), "text")
     if div > 1:

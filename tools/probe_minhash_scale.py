@@ -18,7 +18,7 @@ from schema_validator_spark.session import get_spark
 
 def main():
     divisors = [int(a) for a in sys.argv[1:]] or [16, 8, 4]
-    spark = get_spark(app_name="probe_minhash", cpus=32)
+    spark = get_spark(app_name="probe_minhash")
     big = spark.read.parquet("/tmp/spark_graft_bench/web_pages")
     for div in divisors:
         docs = big.select(

@@ -21,7 +21,7 @@ def main():
     from schema_validator_spark.session import get_spark
     from pyspark.sql import functions as F
 
-    spark = get_spark(app_name="probe", cpus=32)
+    spark = get_spark(app_name="probe")
     if WEB_ROWS:
         from schema_validator_spark.sources.webpages import generate_web_pages
 

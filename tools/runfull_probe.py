@@ -26,7 +26,7 @@ def main():
         print(f"no cached substrate at {data} — run bench.py first", file=sys.stderr)
         sys.exit(1)
 
-    spark = get_spark(app_name="runfull_probe", cpus=32)
+    spark = get_spark(app_name="runfull_probe")
     big = spark.read.parquet(data)
     n_rows = big.count()
     s = sv.schema()
