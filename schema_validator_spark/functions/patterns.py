@@ -43,9 +43,13 @@ BUILTIN_CONFIGS = {
     ),
 }
 
-# Rust `char::is_whitespace` == Unicode White_Space property.  Java regex \s is
-# ASCII-only, so `trim()` parity needs the explicit class (SURVEY.md §7 risk 1).
-UNICODE_WHITESPACE_CLASS = (
-    "[\\t\\n\\x0B\\f\\r \\u0085\\u00A0\\u1680\\u2000-\\u200A"
-    "\\u2028\\u2029\\u202F\\u205F\\u3000]"
+# Rust `char::is_whitespace` == the Unicode White_Space property: these 25
+# code points.  `trim()` strips exactly this set — Spark's one-argument trim
+# strips only ASCII space and Python's bare str.strip() also strips
+# U+001C-U+001F — so plans pass it to Spark's code-point-set StringTrim and to
+# pandas `str.strip` (SURVEY.md §7 risk 1).
+WHITE_SPACE = (
+    "\t\n\x0b\x0c\r \x85\xa0\u1680"
+    + "".join(map(chr, range(0x2000, 0x200B)))
+    + "\u2028\u2029\u202f\u205f\u3000"
 )

@@ -34,7 +34,7 @@ from pyspark.sql import types as T
 
 from .. import errors as E
 from ..errors import ErrorConfig
-from ..functions.patterns import UNICODE_WHITESPACE_CLASS
+from ..functions.patterns import WHITE_SPACE
 from ..schema import (
     BaseSchema,
     BooleanSchema,
@@ -46,11 +46,6 @@ from ..schema import (
 )
 
 VIOLATION_DDL = "struct<field:string,code:string,message:string,error_type:string>"
-
-# Python equivalent of UNICODE_WHITESPACE_CLASS (Rust char::is_whitespace set)
-_PY_WS = "\t\n\x0b\x0c\r \x85\xa0 " + "".join(
-    chr(c) for c in range(0x2000, 0x200B)
-) + "    　"
 
 
 def spark_type_name(dt: T.DataType) -> str:
@@ -124,9 +119,6 @@ def _const_field(name: str, out_ddl: str, code, message, error_type: str) -> Com
 # transforms
 # ---------------------------------------------------------------------------
 
-_TRIM_RE_JVM = f"^{UNICODE_WHITESPACE_CLASS}+|{UNICODE_WHITESPACE_CLASS}+$"
-
-
 def jvm_regex(pattern: str) -> str:
     """Adapt a pattern for Java-regex evaluation with Rust-regex semantics.
 
@@ -188,10 +180,11 @@ def rust_f64_to_string(col: Column) -> Column:
 
 
 def _apply_native_transform(s: Column, t: Transform) -> Column:
+    """``trim`` is Spark's StringTrim with the White_Space code points as its
+    trim-character set (one-argument ``F.trim`` strips ASCII space only,
+    SURVEY.md §7 risk 1): whole UTF-8 characters matched on the bytes."""
     if t.name == "trim":
-        # Rust str::trim trims the Unicode White_Space set; F.trim is
-        # ASCII-space-only, hence the explicit class (SURVEY.md §7 risk 1).
-        return F.regexp_replace(s, _TRIM_RE_JVM, "")
+        return F.trim(s, F.lit(WHITE_SPACE))
     if t.name == "lower":
         return F.lower(s)
     if t.name == "upper":
@@ -213,7 +206,7 @@ def _fused_pandas_transform(transforms: list[Transform], out_ddl: str):
         s = series
         for name, fn in steps:
             if name == "trim":
-                s = s.str.strip(_PY_WS)
+                s = s.str.strip(WHITE_SPACE)
             elif name == "lower":
                 s = s.str.lower()
             elif name == "upper":

@@ -198,7 +198,13 @@ def test_unicode_trim_parity(spark):
     sch = schema().string().trim()
     assert_ok(run_one(spark, sch, " 　 hi \t\n "), "hi")
     # but zero-width space U+200B is NOT White_Space — must survive
-    assert_ok(run_one(spark, sch, "​hi"), "​hi")
+    assert_ok(run_one(spark, sch, "\u200bhi"), "\u200bhi")
+    assert_ok(run_one(spark, sch, " \u3000\t\u2029\xa0"), "")
+    # 4-byte UTF-8 character next to a 3-byte White_Space one; NULL stays NULL
+    emoji, null = run_cases(spark, sch, ["😀\u3000", None])
+    assert_ok(emoji, "😀")
+    assert null[0] is None
+    assert_err(null, "MISSING_FIELD")
 
 
 def test_pattern_unicode_classes_match_rust_dialect(spark):

@@ -258,3 +258,23 @@ def test_plan_stats_counts_python_udf_outputs(spark):
     assert stats["python_evals"] == 1 and stats["python_udfs"] == 2
     stats = plan_stats(df.select(F.pandas_udf(lambda v: v + 1, "long")("id")))
     assert stats["python_evals"] == 1 and stats["python_udfs"] == 1
+
+
+def test_trim_compiles_to_native_string_trim(spark):
+    """`trim()` is Spark's code-point-set StringTrim, not a regex, on both the
+    tabular and the JSON path, and never leaves the JVM."""
+    from schema_validator_spark import validate_json_objects
+    from schema_validator_spark.plans.inspect import plan_stats
+
+    s = schema()
+    tab = spark.createDataFrame([(1, " A.example.com ")], "id long, url string")
+    js = spark.createDataFrame([(1, '{"url":" x "}')], "id long, j string")
+    for out in (
+        ValidationPlan(
+            s.object().field("url", s.string().trim().to_lowercase().url())
+        ).apply(tab),
+        validate_json_objects(js, "j", s.object().field("url", s.string().trim())),
+    ):
+        p = out._jdf.queryExecution().optimizedPlan().toString()
+        assert "trim(" in p and "regexp_replace" not in p, p
+        assert plan_stats(out)["python_evals"] == 0

@@ -6,21 +6,24 @@ Spark jobs would be prohibitively slow), so the strategy generates lists.
 deadline=None: Spark job latency is irrelevant to the property.
 """
 
+import json
 import re
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from schema_validator_spark import ValidationPlan, schema
-from schema_validator_spark.functions.patterns import EMAIL, USERNAME
-from schema_validator_spark.plans.compile import _PY_WS
+from schema_validator_spark import ValidationPlan, schema, validate_json_objects
+from schema_validator_spark.functions.patterns import EMAIL, USERNAME, WHITE_SPACE
 
-# printable-ish unicode incl. whitespace edge cases the trim parity cares
-# about (NBSP, ideographic space, line sep) and \x1c-\x1f (Python isspace
-# but NOT Unicode White_Space — a known Python-vs-Rust trim divergence)
+# printable-ish unicode plus every Unicode White_Space code point and the
+# near misses trim must keep: U+200B, U+FEFF, U+180E (not White_Space since
+# Unicode 6.3) and U+001C-U+001F (Python isspace but NOT White_Space — a
+# known Python-vs-Rust trim divergence); 😀 is a 4-byte UTF-8 character
 _ALPHABET = st.sampled_from(
-    list("abXY09._%+-@ \t\n 　  ") + ["\x1c", "é", "ß", "中"]
+    list("abXY09._%+-@") + list(WHITE_SPACE)
+    + ["\u200b", "\ufeff", "\u180e", "\x1c", "\x1d", "\x1e", "\x1f"]
+    + ["é", "ß", "中", "😀"]
 )
 _TEXTS = st.lists(st.text(_ALPHABET, max_size=24), min_size=1, max_size=60)
 
@@ -79,15 +82,19 @@ def test_plain_string_checks_match_reference_model(spark, values):
 @given(_TEXTS)
 @settings(**_SETTINGS)
 def test_trim_lower_parity_jvm_vs_python(spark, values):
-    """The JVM regexp-trim must agree with the reference model
-    (Unicode White_Space, NOT Python str.strip()'s wider isspace set)."""
+    """The JVM code-point-set trim must agree with the reference model
+    (Unicode White_Space, NOT Python str.strip()'s wider isspace set) on
+    both the tabular and the JSON path."""
     s = schema()
-    sch = s.string().trim().to_lowercase()
+    obj = s.object().field("v", s.string().trim().to_lowercase())
     df = spark.createDataFrame([(i, v) for i, v in enumerate(values)], "i long, v string")
-    plan = ValidationPlan(s.object().field("v", sch))
-    got = {r["i"]: r["v"] for r in plan.apply(df).select("i", "v").collect()}
-    for i, v in enumerate(values):
-        assert got[i] == v.strip(_PY_WS).lower(), f"{v!r}"
+    js = spark.createDataFrame(
+        [(i, json.dumps({"v": v})) for i, v in enumerate(values)], "i long, j string"
+    )
+    for out in (ValidationPlan(obj).apply(df), validate_json_objects(js, "j", obj)):
+        got = {r["i"]: r["v"] for r in out.select("i", "v").collect()}
+        for i, v in enumerate(values):
+            assert got[i] == v.strip(WHITE_SPACE).lower(), f"{v!r}"
 
 
 @given(_TEXTS)
