@@ -2,8 +2,9 @@
 embedding-cosine near-dup.  (Exact dedup lives in uniqueness.py.)
 
 Scale design:
-- Shingling/minhashing are per-row native array expressions — no shuffle, no
-  Python.
+- Shingles and MinHash signatures come from the per-doc word split
+  (``_normalized_words``) with native expressions — no Python; signatures
+  are a hash-agg MIN over exploded gram positions (``exploded_gram_stream``).
 - LSH banding turns the O(n²) pair problem into groupBy(band_hash): only rows
   sharing a band bucket are joined.  At 10^12 docs, band buckets are the only
   viable candidate generator.
@@ -47,64 +48,6 @@ def _ensure_parallelism(df: DataFrame) -> DataFrame:
     if n_parts < max(target // 2, 2):
         return df.repartition(target)
     return df
-
-
-# -- shingling ---------------------------------------------------------------
-
-def word_shingles(text: Column, n: int = 3) -> Column:
-    """Distinct word n-grams of whitespace-normalized lowercase text.
-    Returns array<string> (empty array for short docs)."""
-    normalized = F.regexp_replace(F.lower(F.trim(text)), r"\s+", " ")
-    words = F.split(normalized, " ")
-    count = F.size(words)
-    grams = F.when(count >= n, F.transform(
-        F.sequence(F.lit(1), count - (n - 1)),
-        lambda i: F.concat_ws(" ", F.slice(words, i, n)),
-    )).otherwise(F.array(normalized))
-    return F.array_distinct(grams)
-
-
-def char_shingles(text: Column, k: int = 8) -> Column:
-    normalized = F.regexp_replace(F.lower(F.trim(text)), r"\s+", " ")
-    n = F.length(normalized)
-    grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1))),
-        lambda i: F.substr(normalized, i, F.lit(k)),
-    )
-    return F.array_distinct(grams)
-
-
-# -- MinHash -----------------------------------------------------------------
-
-def minhash_signature(
-    shingles: Column, num_hashes: int = 32, hash_fn: str = "xxhash64"
-) -> Column:
-    """k-permutation MinHash signature over a shingle array.
-
-    xxhash64: array<bigint> of min(xxhash64(seed_i, shingle)).
-    md5:      array<string> of lexicographic min(md5(i || shingle)) — slower
-              but byte-identical in DuckDB (oracle path).
-    """
-    # NB: seeds must be bound via closure factories — a default-arg lambda
-    # (lambda s, i=i: ...) would be treated by PySpark as a two-parameter
-    # (element, index) lambda and the seed silently replaced by the index.
-    # (A nested transform-over-seed-sequence form builds a 16x smaller plan
-    # but executes ~5x slower: the flat F.array lets SimplifyExtractValueOps
-    # reduce each band's _sig[i] to its single component, and nested lambda
-    # binding is pure interpreted overhead — measured, do not "simplify".)
-    def _xx(i: int):
-        return lambda s: F.xxhash64(F.lit(i), s)
-
-    def _md5(i: int):
-        return lambda s: F.md5(F.concat(F.lit(f"{i}|"), s))
-
-    if hash_fn == "xxhash64":
-        sig = [F.array_min(F.transform(shingles, _xx(i))) for i in range(num_hashes)]
-    elif hash_fn == "md5":
-        sig = [F.array_min(F.transform(shingles, _md5(i))) for i in range(num_hashes)]
-    else:
-        raise ValueError(f"unknown hash_fn {hash_fn!r}")
-    return F.array(*sig)
 
 
 def _non_degenerate_text(df: DataFrame, text_col: str = "_text") -> DataFrame:
@@ -196,10 +139,10 @@ def shingled_docs(
 ) -> DataFrame:
     """(_id, _shingles): DISTINCT word n-grams per non-degenerate doc.
 
-    Equivalent to ``word_shingles`` on the same text (short docs fall back to
-    the single whole-normalized-text shingle) but built over the materialized
-    ``_words`` projection, so each gram lambda costs one slice+concat instead
-    of a full regex+split re-evaluation (see ``_normalized_words``).
+    Docs shorter than ``n_gram`` words fall back to the single
+    whole-normalized-text shingle.  Built over the materialized ``_words``
+    projection, so each gram lambda costs one slice+concat instead of a full
+    regex+split re-evaluation (see ``_normalized_words``).
     """
     words = _normalized_words(df, id_col, text_col)
     w = F.col("_words")
@@ -233,7 +176,7 @@ def exploded_gram_stream(
     array_distinct); use only under aggregates that are multiset-invariant
     (MIN for MinHash signatures) or followed by an explicit distinct.  Short
     docs emit the whole normalized text as their single gram, matching
-    ``word_shingles``' fallback.  ``max_positions`` truncates each doc to its
+    ``shingled_docs``' fallback.  ``max_positions`` truncates each doc to its
     first that-many gram positions (callers whose downstream state must stay
     bounded per doc, e.g. SimHash's 16-bit vote lanes).
     """
@@ -283,8 +226,8 @@ def minhash_lsh_candidates(
     measured — see ``_normalized_words``), while this shape is 100% codegen
     with a map-side-combined single shuffle keyed by doc id (~32 longs/doc).
     MIN is multiset-invariant, so skipping array_distinct changes nothing;
-    both hash families produce bit-identical signatures to the HOF form
-    (lexicographic MIN for the md5 family equals array_min on strings).
+    both hash families produce the signatures an array_min over each doc's
+    distinct shingles would (lexicographic MIN for the md5 family).
     """
     if num_hashes % bands != 0:
         raise ValueError("num_hashes must be divisible by bands")
@@ -415,7 +358,7 @@ def winnowed_keys(
     w = F.col("_words")
     cnt = F.size(w)
     # positional (NOT distinct) gram-hash sequence; <n_gram-word docs fall
-    # back to the whole normalized text, matching word_shingles/shingled_docs
+    # back to the whole normalized text, matching shingled_docs
     ghash = F.when(
         cnt >= n_gram,
         F.transform(
@@ -721,33 +664,6 @@ def containment_pairs(
 
 # -- SimHash -------------------------------------------------------------------
 
-def simhash64(text: Column, n_gram: int = 2) -> Column:
-    """64-bit SimHash fingerprint: per-bit majority vote over shingle hashes.
-
-    Native bit arithmetic via aggregate over the shingle array: accumulator =
-    array of 64 vote counters packed as one pass of shiftright/bitand.
-    Implemented as a fold into an array<int> of votes, then sign → bits.
-    """
-    shingles = word_shingles(text, n_gram)
-    hashes = F.transform(shingles, lambda s: F.xxhash64(s))
-    def _vote_merge(i: int):
-        # closure factory, NOT a default arg (see minhash_signature note)
-        return lambda acc, h: acc + (
-            F.shiftright(h, i).bitwiseAND(F.lit(1).cast("bigint")).cast("int") * 2 - 1
-        )
-
-    fp = F.lit(0).cast("bigint")
-    for i in range(64):
-        # vote_i = Σ over shingles of (+1 if bit i set else −1)
-        vote = F.aggregate(hashes, F.lit(0), _vote_merge(i))
-        fp = fp.bitwiseOR(
-            F.when(vote > 0, F.shiftleft(F.lit(1).cast("bigint"), i)).otherwise(
-                F.lit(0).cast("bigint")
-            )
-        )
-    return fp
-
-
 def hamming64(a: Column, b: Column) -> Column:
     return F.bit_count(a.bitwiseXOR(b))
 
@@ -776,8 +692,6 @@ def simhash_fingerprints(
     md5(shingle) — byte-identical in DuckDB, so the whole SimHash pipeline is
     oracle-checkable (the reason this variant exists).
 
-    This is the scale shape: the single-expression ``simhash64`` fold evaluates
-    64 array passes per row — fine for ad-hoc use, ~10× slower in practice.
     Output: (_id, _fp).
 
     Path split (the r4 minhash lesson, applied r5): the FAST family streams

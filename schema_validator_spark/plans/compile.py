@@ -19,6 +19,13 @@ Design notes (Spark-first, SURVEY.md §3-4):
   never one per combinator), evaluated once per row in a staging projection
   (``TransformStage``) that the checks read from.
 - Byte-length semantics: Rust ``String::len`` counts bytes → ``octet_length``.
+- One place for value-check semantics: a field compiles as a type/coerce
+  stage, then ``_value_checks`` (transforms, length, pattern, literal
+  equality, each through ``set_message``), then ``_finish`` (first-failure
+  chain, NULL/missing rules, the pure-boolean ``passes``).  Only the
+  type/coerce stage is per path: here on the column's static Spark type;
+  plans/json.py runs its own on each row's runtime JSON type and reuses the
+  rest.
 """
 
 from __future__ import annotations
@@ -103,13 +110,20 @@ def _override(cfg: Optional[ErrorConfig], code, message):
     return code, message
 
 
-def _const_field(name: str, out_ddl: str, code, message, error_type: str) -> CompiledField:
+def _check(cfg: Optional[ErrorConfig], name: str, cond: Column, code, message, error_type: str):
+    """One ``(fail_cond, violation)`` link of a first-failure chain."""
+    return cond, _viol(name, *_override(cfg, code, message), error_type)
+
+
+def _const_field(
+    name: str, out_ddl: str, cfg: Optional[ErrorConfig], code, message, error_type: str
+) -> CompiledField:
     """A field whose every row fails with the same violation (e.g. static type
     mismatch).  Catalyst constant-folds this to zero per-row work."""
     return CompiledField(
         name,
         F.lit(None).cast(out_ddl),
-        _viol(name, code, message, error_type),
+        _viol(name, *_override(cfg, code, message), error_type),
         out_ddl,
         F.lit(False),
     )
@@ -291,88 +305,146 @@ def _apply_transforms(
 
 
 # ---------------------------------------------------------------------------
-# per-kind compilers
+# value checks — shared by the tabular front end below and plans/json.py
 # ---------------------------------------------------------------------------
 
 
-def _compile_string(
-    sch: StringSchema,
-    col: Column,
-    name: str,
-    src: T.DataType,
-    stage: TransformStage,
-) -> CompiledField:
-    tn = spark_type_name(src)
-    out_ddl = sch.inner_output_type
+def _bool_str(col: Column) -> Column:
+    """Rust's ``bool`` rendering: ``true`` / ``false``."""
+    return F.when(col, F.lit("true")).otherwise(F.lit("false"))
+
+
+def _rust_debug_col(value, col: Column) -> Column:
+    """Rust ``{:?}`` of a column holding values of ``value``'s type
+    (literal.rs:68-78): strings quoted, embedded quotes/backslashes escaped."""
+    if isinstance(value, bool):
+        return _bool_str(col)
+    if isinstance(value, str):
+        return F.concat(
+            F.lit('"'),
+            F.regexp_replace(F.regexp_replace(col, r"\\", r"\\\\"), '"', '\\\\"'),
+            F.lit('"'),
+        )
+    return col.cast("string")
+
+
+_LIT_TYPE = {str: "String", bool: "Boolean", int: "Integer", float: "Float"}
+
+
+def _literal_type_error(sch: LiteralSchema):
+    """``(code, message)`` of a literal's failed downcast: got is Debug of
+    ``&dyn Any`` → ``Any { .. }`` (literal.rs:57-67)."""
+    return E.LITERAL_ERROR, E.literal_error_message(E.rust_debug(sch.value), "Any { .. }")
+
+
+def _value_checks(
+    sch: BaseSchema, s: Column, name: str, stage: TransformStage
+) -> tuple[Column, list[tuple[Column, Column]], str]:
+    """The checks on a value that passed its type/coerce stage, in the
+    reference's order, and the value the field outputs: ``(value, checks,
+    out_ddl)``.  Each check is a ``(fail_cond, violation)`` link of the
+    field's first-failure chain (``_first_failure``)."""
     cfg = sch.error_config
+    if isinstance(sch, LiteralSchema):  # literal.rs:68-78
+        got = _rust_debug_col(sch.value, s)
+        msg = F.format_string(
+            "Literal error: expected %s, got %s", F.lit(E.rust_debug(sch.value)), got
+        )
+        eq = _check(cfg, name, s != F.lit(sch.value), E.LITERAL_ERROR, msg, "Literal")
+        return s, [eq], sch.output_type
+    if not isinstance(sch, StringSchema):  # number / boolean: transforms only
+        out_ddl = "double" if isinstance(sch, NumberSchema) else "boolean"
+        return _apply_transforms(s, sch.transforms, out_ddl, name, stage), [], out_ddl
 
-    # type / coerce stage (string.rs:705-717, coerce 684-698)
-    if tn == "String":
-        s = col
-    elif sch.coerce and tn == "Integer":
-        s = col.cast("string")
-    elif sch.coerce and tn == "Float":
-        s = rust_f64_to_string(col)
-    elif sch.coerce and tn == "Boolean":
-        s = F.when(col, F.lit("true")).otherwise(F.lit("false"))
-    else:
-        code, msg = _override(cfg, E.TYPE_ERROR, E.type_error_message("String", tn))
-        return _const_field(name, out_ddl, code, msg, "Type")
-
-    checks: list[tuple[Column, Column]] = []  # (fail_cond, violation)
-
+    out_ddl = sch.inner_output_type
+    checks: list[tuple[Column, Column]] = []
     if sch.has_transforms:
         # TransformedSchema quirk: transforms, then PATTERN ONLY
         # (string.rs:251-283); min/max silently dropped.
         s = _apply_transforms(s, sch.transforms, out_ddl, name, stage)
-        if sch.pattern_regex is not None and out_ddl == "string":
-            code, msg = _override(
-                cfg,
-                E.PATTERN_ERROR,
-                F.format_string(
-                    "Pattern error: '%s' does not match pattern '%s'",
-                    s,
-                    F.lit(sch.pattern_regex),
-                ),
-            )
-            checks.append((~s.rlike(jvm_regex(sch.pattern_regex)), _viol(name, code, msg, "Pattern")))
     else:
         blen = F.octet_length(s)  # Rust String::len is BYTES
         if sch.min_len is not None:
-            code, msg = _override(
-                cfg,
-                E.MIN_LENGTH_ERROR,
-                F.format_string(
-                    "Length error: expected at least %s characters, got %s",
-                    F.lit(builtins.str(sch.min_len)),
-                    blen.cast("string"),
-                ),
+            msg = F.format_string(
+                "Length error: expected at least %s characters, got %s",
+                F.lit(builtins.str(sch.min_len)),
+                blen.cast("string"),
             )
-            checks.append((blen < sch.min_len, _viol(name, code, msg, "MinLength")))
+            checks.append(_check(cfg, name, blen < sch.min_len, E.MIN_LENGTH_ERROR, msg, "MinLength"))
         if sch.max_len is not None:
-            code, msg = _override(
-                cfg,
-                E.MAX_LENGTH_ERROR,
-                F.format_string(
-                    "Length error: expected at most %s characters, got %s",
-                    F.lit(builtins.str(sch.max_len)),
-                    blen.cast("string"),
-                ),
+            msg = F.format_string(
+                "Length error: expected at most %s characters, got %s",
+                F.lit(builtins.str(sch.max_len)),
+                blen.cast("string"),
             )
-            checks.append((blen > sch.max_len, _viol(name, code, msg, "MaxLength")))
-        if sch.pattern_regex is not None:
-            code, msg = _override(
-                cfg,
-                E.PATTERN_ERROR,
-                F.format_string(
-                    "Pattern error: '%s' does not match pattern '%s'",
-                    s,
-                    F.lit(sch.pattern_regex),
-                ),
-            )
-            checks.append((~s.rlike(jvm_regex(sch.pattern_regex)), _viol(name, code, msg, "Pattern")))
+            checks.append(_check(cfg, name, blen > sch.max_len, E.MAX_LENGTH_ERROR, msg, "MaxLength"))
+    if sch.pattern_regex is not None and out_ddl == "string":
+        msg = F.format_string(
+            "Pattern error: '%s' does not match pattern '%s'", s, F.lit(sch.pattern_regex)
+        )
+        fail = ~s.rlike(jvm_regex(sch.pattern_regex))
+        checks.append(_check(cfg, name, fail, E.PATTERN_ERROR, msg, "Pattern"))
+    return s, checks, out_ddl
 
-    return _finish(name, col, s, checks, sch, out_ddl)
+
+def _first_failure(checks: list[tuple[Column, Column]]) -> tuple[Column, Column]:
+    """``(violation, fail_any)``: the first failing check's violation (a
+    ``F.when`` chain short-circuits) and whether any check failed, as a pure
+    boolean (a NULL condition does not fail, as in the chain)."""
+    chain, fail_any = None, F.lit(False)
+    for cond, v in checks:
+        chain = F.when(cond, v) if chain is None else chain.when(cond, v)
+        fail_any = fail_any | F.coalesce(cond, F.lit(False))
+    return (_null_viol() if chain is None else chain.otherwise(_null_viol())), fail_any
+
+
+def _finish(
+    name: str,
+    value: Column,
+    checks: list[tuple[Column, Column]],
+    out_ddl: str,
+    null_passes: Optional[Column],
+    missing: Optional[Column],
+    missing_cfg: Optional[ErrorConfig] = None,
+) -> CompiledField:
+    """Assemble a field from its checks.  Rows where ``null_passes`` holds
+    pass with a NULL value (optional(), optional.rs:65-98); rows where
+    ``missing`` holds fail with MISSING_FIELD under the object-level
+    ``missing_cfg`` (object.rs:297-305), ahead of everything else."""
+    viol, fail_any = _first_failure(checks)
+    passes = ~fail_any
+    if null_passes is not None:
+        viol = F.when(null_passes, _null_viol()).otherwise(viol)
+        value = F.when(null_passes, F.lit(None).cast(out_ddl)).otherwise(value)
+        passes = F.when(null_passes, F.lit(True)).otherwise(passes)
+    if missing is not None:
+        code, msg = _override(missing_cfg, E.MISSING_FIELD, E.missing_field_message(name))
+        viol = F.when(missing, _viol(name, code, msg, "Missing")).otherwise(viol)
+        passes = F.when(missing, F.lit(False)).otherwise(passes)
+    value = F.when(viol.isNull(), value).otherwise(F.lit(None).cast(out_ddl))
+    return CompiledField(name, value, viol, out_ddl, passes)
+
+
+# ---------------------------------------------------------------------------
+# tabular type/coerce stage: on the column's static Spark type.  Each returns
+# ``(value, checks)``, or a constant field when the type can never pass.
+# ---------------------------------------------------------------------------
+
+
+def _coerce_string(sch: StringSchema, col: Column, name: str, tn: str, src: T.DataType):
+    # string.rs:705-717, coerce 684-698
+    if tn == "String":
+        return col, []
+    if sch.coerce and tn == "Integer":
+        return col.cast("string"), []
+    if sch.coerce and tn == "Float":
+        return rust_f64_to_string(col), []
+    if sch.coerce and tn == "Boolean":
+        return _bool_str(col), []
+    return _const_field(
+        name, sch.inner_output_type, sch.error_config,
+        E.TYPE_ERROR, E.type_error_message("String", tn), "Type",
+    )
 
 
 def _rust_f64_parse(col: Column) -> Column:
@@ -390,187 +462,97 @@ def _rust_f64_parse(col: Column) -> Column:
     )
 
 
-def _compile_number(
-    sch: NumberSchema,
-    col: Column,
-    name: str,
-    src: T.DataType,
-    stage: TransformStage,
-) -> CompiledField:
-    tn = spark_type_name(src)
+def _coerce_number(sch: NumberSchema, col: Column, name: str, tn: str, src: T.DataType):
+    # number.rs:151-188
     cfg = sch.error_config
-    checks: list[tuple[Column, Column]] = []
-
-    if tn == "Float":
-        s = col.cast("double")
-    elif sch.coerce:
-        if tn == "Integer":
-            s = col.cast("double")
-        elif tn == "String":
-            s = _rust_f64_parse(col)
-            code, msg = _override(
-                cfg, E.COERCION_ERROR, E.coercion_error_message("String", "Number")
-            )
-            checks.append((col.isNotNull() & s.isNull(), _viol(name, code, msg, "Coercion")))
-        elif tn == "Boolean":
-            s = F.when(col, 1.0).otherwise(0.0)
-        else:
-            code, msg = _override(
-                cfg, E.COERCION_ERROR, E.coercion_error_message(tn, "Number")
-            )
-            return _const_field(name, "double", code, msg, "Coercion")
-    else:
-        code, msg = _override(cfg, E.TYPE_ERROR, E.type_error_message("Number", tn))
-        return _const_field(name, "double", code, msg, "Type")
-
-    s = _apply_transforms(s, sch.transforms, "double", name, stage)
-    return _finish(name, col, s, checks, sch, "double")
-
-
-def _compile_boolean(
-    sch: BooleanSchema,
-    col: Column,
-    name: str,
-    src: T.DataType,
-    stage: TransformStage,
-) -> CompiledField:
-    tn = spark_type_name(src)
-    cfg = sch.error_config
-    coerce_null_to_false = False
-
+    if tn == "Float" or (sch.coerce and tn == "Integer"):
+        return col.cast("double"), []
+    if not sch.coerce:
+        return _const_field(
+            name, "double", cfg, E.TYPE_ERROR, E.type_error_message("Number", tn), "Type"
+        )
+    if tn == "String":
+        s = _rust_f64_parse(col)
+        msg = E.coercion_error_message("String", "Number")
+        return s, [_check(cfg, name, col.isNotNull() & s.isNull(), E.COERCION_ERROR, msg, "Coercion")]
     if tn == "Boolean":
-        s = col
-        # With coercion on, a NULL is Option→None → false (boolean.rs:74-75).
-        coerce_null_to_false = sch.coerce
-    elif sch.coerce:
-        # JS-style truthiness (boolean.rs:264-281)
-        if tn == "Integer":
-            s = col != 0
-        elif tn == "Float":
-            s = col != 0.0
-        elif tn == "String":
-            s = F.octet_length(col) > 0  # "" → false, "false" → true!
-        elif isinstance(src, T.ArrayType):
-            s = F.size(col) > 0
-        else:
-            code, msg = _override(
-                cfg, E.COERCION_ERROR, E.coercion_error_message(tn, "Boolean")
-            )
-            return _const_field(name, "boolean", code, msg, "Coercion")
-        # Option coercion: None → false (boolean.rs:74-75, tests/coercion:80-81)
-        coerce_null_to_false = True
-    else:
-        code, msg = _override(cfg, E.TYPE_ERROR, E.type_error_message("Boolean", tn))
-        return _const_field(name, "boolean", code, msg, "Type")
+        return F.when(col, 1.0).otherwise(0.0), []
+    return _const_field(
+        name, "double", cfg, E.COERCION_ERROR, E.coercion_error_message(tn, "Number"), "Coercion"
+    )
 
-    if coerce_null_to_false:
-        # NULL is the value false, and goes through the transforms as such
-        s = F.when(col.isNull(), F.lit(False)).otherwise(s)
-    s = _apply_transforms(s, sch.transforms, "boolean", name, stage)
-    cf = _finish(name, col, s, [], sch, "boolean")
-    if coerce_null_to_false:
+
+def _coerce_boolean(sch: BooleanSchema, col: Column, name: str, tn: str, src: T.DataType):
+    # boolean.rs:259-298
+    cfg = sch.error_config
+    if tn == "Boolean":
+        return col, []
+    if not sch.coerce:
+        return _const_field(
+            name, "boolean", cfg, E.TYPE_ERROR, E.type_error_message("Boolean", tn), "Type"
+        )
+    # JS-style truthiness (boolean.rs:264-281)
+    if tn == "Integer":
+        return col != 0, []
+    if tn == "Float":
+        return col != 0.0, []
+    if tn == "String":
+        return F.octet_length(col) > 0, []  # "" → false, "false" → true!
+    if isinstance(src, T.ArrayType):
+        return F.size(col) > 0, []
+    return _const_field(
+        name, "boolean", cfg, E.COERCION_ERROR, E.coercion_error_message(tn, "Boolean"), "Coercion"
+    )
+
+
+def _coerce_literal(sch: LiteralSchema, col: Column, name: str, tn: str, src: T.DataType):
+    # literal.rs:56-67: the downcast needs the literal's exact type
+    if tn != _LIT_TYPE[type(sch.value)]:
+        return _const_field(
+            name, sch.output_type, sch.error_config, *_literal_type_error(sch), "Literal"
+        )
+    return col, []
+
+
+_COERCE = {
+    StringSchema: _coerce_string,
+    NumberSchema: _coerce_number,
+    BooleanSchema: _coerce_boolean,
+    LiteralSchema: _coerce_literal,
+}
+
+
+def _compile_value(
+    sch: BaseSchema, col: Column, name: str, src: T.DataType, stage: TransformStage
+) -> CompiledField:
+    coerce = _COERCE.get(type(sch))
+    if coerce is None:
+        raise TypeError(f"cannot compile schema kind {sch.kind!r}")
+    typed = coerce(sch, col, name, spark_type_name(src), src)
+    if isinstance(typed, CompiledField):
+        return typed
+    s, checks = typed
+    null = col.isNull()
+    # With coercion on, a boolean NULL is Option→None → false (boolean.rs:74-75,
+    # tests/coercion:80-81), and goes through the transforms as such.
+    null_is_false = isinstance(sch, BooleanSchema) and sch.coerce
+    if null_is_false:
+        s = F.when(null, F.lit(False)).otherwise(s)
+    s, more, out_ddl = _value_checks(sch, s, name, stage)
+    # tabular NULL: optional() passes it, a required field reports it Missing
+    cf = _finish(
+        name, s, checks + more, out_ddl,
+        null if sch.nullable else None, None if sch.nullable else null,
+    )
+    if null_is_false:
         cf = CompiledField(
             name,
-            F.when(col.isNull(), s).otherwise(cf.value),
-            F.when(col.isNull(), _null_viol()).otherwise(cf.violation),
-            "boolean",
-            F.when(col.isNull(), F.lit(True)).otherwise(cf.passes),
+            F.when(null, s).otherwise(cf.value),
+            F.when(null, _null_viol()).otherwise(cf.violation),
+            out_ddl,
+            F.when(null, F.lit(True)).otherwise(cf.passes),
         )
     return cf
-
-
-_LIT_TYPE = {str: "String", bool: "Boolean", int: "Integer", float: "Float"}
-
-
-def _compile_literal(
-    sch: LiteralSchema,
-    col: Column,
-    name: str,
-    src: T.DataType,
-    stage: TransformStage,
-) -> CompiledField:
-    tn = spark_type_name(src)
-    cfg = sch.error_config
-    expected_dbg = E.rust_debug(sch.value)
-    want = _LIT_TYPE[type(sch.value)]
-    out_ddl = sch.output_type
-
-    if tn != want:
-        # Failed downcast: got is Debug of &dyn Any → "Any { .. }"
-        # (literal.rs:57-67).
-        code, msg = _override(
-            cfg, E.LITERAL_ERROR, E.literal_error_message(expected_dbg, "Any { .. }")
-        )
-        return _const_field(name, out_ddl, code, msg, "Literal")
-
-    if isinstance(sch.value, bool):
-        got_dbg = F.when(col, F.lit("true")).otherwise(F.lit("false"))
-    elif isinstance(sch.value, str):
-        # Rust {:?} quoting; escaping of embedded quotes/backslashes included.
-        got_dbg = F.concat(
-            F.lit('"'),
-            F.regexp_replace(
-                F.regexp_replace(col, r"\\", r"\\\\"), '"', '\\\\"'
-            ),
-            F.lit('"'),
-        )
-    else:
-        got_dbg = col.cast("string")
-
-    code, msg = _override(
-        cfg,
-        E.LITERAL_ERROR,
-        F.format_string(
-            "Literal error: expected %s, got %s", F.lit(expected_dbg), got_dbg
-        ),
-    )
-    checks = [(col != F.lit(sch.value), _viol(name, code, msg, "Literal"))]
-    return _finish(name, col, col, checks, sch, out_ddl)
-
-
-def _finish(
-    name: str,
-    src_col: Column,
-    value: Column,
-    checks: list[tuple[Column, Column]],
-    sch: BaseSchema,
-    out_ddl: str,
-    missing_cfg: Optional[ErrorConfig] = None,
-) -> CompiledField:
-    """Assemble the when-chain (first failing check wins) + NULL handling."""
-    viol = _null_viol()
-    fail_any = F.lit(False)
-    if checks:
-        chain = None
-        for cond, v in checks:
-            chain = F.when(cond, v) if chain is None else chain.when(cond, v)
-            fail_any = fail_any | F.coalesce(cond, F.lit(False))
-        viol = chain.otherwise(_null_viol())
-
-    if sch.nullable:
-        # optional(): NULL passes with NULL output (optional.rs:65-98)
-        viol = F.when(src_col.isNull(), _null_viol()).otherwise(viol)
-        value = F.when(src_col.isNull(), F.lit(None).cast(out_ddl)).otherwise(value)
-        passes = F.when(src_col.isNull(), F.lit(True)).otherwise(~fail_any)
-    else:
-        # NULL in a required column = missing field (object.rs:297-305);
-        # uses the OBJECT-level error config, patched in by compile_object.
-        code, msg = _override(
-            missing_cfg, E.MISSING_FIELD, E.missing_field_message(name)
-        )
-        viol = F.when(src_col.isNull(), _viol(name, code, msg, "Missing")).otherwise(viol)
-        passes = F.when(src_col.isNull(), F.lit(False)).otherwise(~fail_any)
-
-    value = F.when(viol.isNull(), value).otherwise(F.lit(None).cast(out_ddl))
-    return CompiledField(name, value, viol, out_ddl, passes)
-
-
-_COMPILERS = {
-    StringSchema: _compile_string,
-    NumberSchema: _compile_number,
-    BooleanSchema: _compile_boolean,
-    LiteralSchema: _compile_literal,
-}
 
 
 def compile_field(
@@ -584,10 +566,7 @@ def compile_field(
     """Compile one field.  Its Python transform calls are registered in
     ``stage`` and the returned columns read their staged outputs, so
     ``stage.apply`` must run on the input first."""
-    fn = _COMPILERS.get(type(sch))
-    if fn is None:
-        raise TypeError(f"cannot compile schema kind {sch.kind!r}")
-    cf = fn(sch, col, name, src, stage)
+    cf = _compile_value(sch, col, name, src, stage)
     if sch.nullable:
         # Covers constant-violation fields too (e.g. optional string over a
         # long column): explicit NULL always passes (optional.rs:375-386).
@@ -645,12 +624,10 @@ def compile_object(
     out: list[CompiledField] = []
     for name, sch in obj.fields.items():
         if name not in by_name:
-            code, msg = _override(
-                obj.error_config, E.MISSING_FIELD, E.missing_field_message(name)
-            )
             out.append(
                 _const_field(
-                    name, getattr(sch, "output_type", "string"), code, msg, "Missing"
+                    name, getattr(sch, "output_type", "string"), obj.error_config,
+                    E.MISSING_FIELD, E.missing_field_message(name), "Missing",
                 )
             )
             continue

@@ -12,6 +12,9 @@ must do explicitly").  Output contract per row:
 - ``valid: boolean`` = violations is empty,
 - non-schema columns pass through untouched (object.rs:269).
 
+``assemble_rows`` builds the violations array and ``valid`` for both
+``ValidationPlan.apply`` and ``plans.json.validate_json_objects``.
+
 Per-partition verdict aggregation and metric ``Observation`` (metrics computed
 during the same action that materializes the rows — zero extra scans) live
 here too.
@@ -26,7 +29,14 @@ from pyspark.sql import functions as F
 
 from ..errors import OBJECT_ERROR
 from ..schema import BaseSchema, ObjectSchema
-from .compile import TransformStage, _null_viol, _viol, compile_field, compile_object
+from .compile import (
+    CompiledField,
+    TransformStage,
+    _null_viol,
+    _viol,
+    compile_field,
+    compile_object,
+)
 
 VIOLATIONS_COL = "violations"
 VALID_COL = "valid"
@@ -58,41 +68,9 @@ class ValidationPlan:
                 if f.name in df.columns
             ]
         cols += [f.value.alias(f.name) for f in fields]
-
-        # row-level cross-field checks (ObjectSchema.check): evaluated over
-        # the INPUT columns inside this same projection — zero extra passes.
-        # SQL CHECK semantics: NULL predicate = pass.
-        check_passes, check_viols = [], []
-        for name, pred, code, message in getattr(self.schema, "checks", []):
-            pred_col = F.expr(pred) if isinstance(pred, str) else pred
-            ok = F.coalesce(pred_col, F.lit(True))
-            check_passes.append(ok)
-            check_viols.append(
-                F.when(~ok, _viol(name, code, message, "Check")).otherwise(
-                    _null_viol()
-                )
-            )
-
-        viol_array = F.filter(
-            F.array(*[f.violation for f in fields], *check_viols),
-            lambda v: v.isNotNull(),
-        )
-        cols.append(viol_array.alias(VIOLATIONS_COL))
-        # `valid` is a pure-boolean conjunction (NOT derived from the array):
-        # downstream plans that consume only `valid` — verdict aggregation,
-        # the scaling-bench hot path — let Catalyst prune the violation
-        # structs and the higher-order filter entirely, keeping the whole
-        # projection in whole-stage codegen.  Equivalence with
-        # size(violations)==0 is asserted in tests.  Start from lit(True) so
-        # a zero-field object schema validates every row (the reference's
-        # empty ObjectSchema accepts any map).
-        valid = F.lit(True)
-        for f in fields:
-            valid = valid & f.passes
-        for ok in check_passes:
-            valid = valid & ok
-        cols.append(valid.alias(VALID_COL))
-        return stage.apply(df).select(*cols)
+        # the row checks (ObjectSchema.check) read the INPUT columns, inside
+        # this same projection — zero extra passes
+        return assemble_rows(stage.apply(df), cols, fields, self.schema.checks)
 
     # -- derived outputs -------------------------------------------------
     def violations(
@@ -438,6 +416,51 @@ def _object_transform_udf(fn, return_type: str, mode: str):
     # no filter on the output is pushed below the call, and it is never
     # copied into a second Python eval: the transform runs once per row
     return udf.asNondeterministic()
+
+
+def _non_null(violations: Column) -> Column:
+    return F.filter(violations, lambda v: v.isNotNull())
+
+
+def assemble_rows(
+    df: DataFrame,
+    cols: list,
+    fields: list[CompiledField],
+    checks: Sequence[tuple],
+    row_ok: Optional[Column] = None,
+    row_viol: Optional[Column] = None,
+) -> DataFrame:
+    """Project ``df`` to ``cols`` plus the ``violations`` array and the
+    ``valid`` flag of ``fields`` and of the row checks ``checks``
+    (``ObjectSchema.check``: SQL CHECK semantics, a NULL predicate passes),
+    all evaluated over ``df``.  A row where ``row_ok`` is false (the JSON
+    path's row-level guards) reports ``row_viol`` in place of its field
+    violations; its checks still run.
+
+    ``valid`` is a pure-boolean conjunction, NOT derived from the array:
+    plans that consume only ``valid`` — verdict aggregation, a ``valid``
+    filter — let Catalyst prune the violation structs and the higher-order
+    filter entirely, keeping the projection in whole-stage codegen.
+    Equivalence with size(violations)==0 is asserted in tests.  Without
+    ``row_ok`` it starts from lit(True), so a zero-field object schema
+    validates every row (the reference's empty ObjectSchema accepts any
+    map)."""
+    valid = F.lit(True) if row_ok is None else row_ok
+    for f in fields:
+        valid = valid & f.passes
+    check_viols = []
+    for name, pred, code, message in checks:
+        ok = F.coalesce(F.expr(pred) if isinstance(pred, str) else pred, F.lit(True))
+        valid = valid & ok
+        check_viols.append(F.when(~ok, _viol(name, code, message, "Check")).otherwise(_null_viol()))
+    field_viols = [f.violation for f in fields]
+    if row_ok is None:
+        viols = _non_null(F.array(*field_viols, *check_viols))
+    else:
+        viols = F.when(row_ok, _non_null(F.array(*field_viols))).otherwise(F.array(row_viol))
+        if check_viols:
+            viols = F.concat(viols, _non_null(F.array(*check_viols)))
+    return df.select(*cols, viols.alias(VIOLATIONS_COL), valid.alias(VALID_COL))
 
 
 def validate_column(

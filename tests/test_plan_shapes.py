@@ -278,3 +278,32 @@ def test_trim_compiles_to_native_string_trim(spark):
         p = out._jdf.queryExecution().optimizedPlan().toString()
         assert "trim(" in p and "regexp_replace" not in p, p
         assert plan_stats(out)["python_evals"] == 0
+
+
+def test_json_valid_filter_is_pure_boolean(spark):
+    """On the JSON path `valid` is the same pure-boolean conjunction as on the
+    tabular path: a `valid` filter holds no higher-order function and no
+    `size(` (of the violations array, or of a regex match list)."""
+    from schema_validator_spark import validate_json_objects
+
+    s, c = schema(), schema().coerce()
+    obj = (
+        s.object()
+        .field("url", s.string().trim().to_lowercase().url())
+        .field("text", s.string().min_length(20).optional())
+        .field("age", c.number())
+        .field("plan", s.literal("pro"))
+    )
+    js = spark.createDataFrame([(1, '{"url":"x"}')], "id long, j string")
+    out = validate_json_objects(js, "j", obj).where(F.col("valid")).select(*obj.fields)
+    stack, filters = [out._jdf.queryExecution().optimizedPlan()], []
+    while stack:
+        node = stack.pop()
+        if node.getClass().getSimpleName() == "Filter":
+            filters.append(node.condition().toString())
+        it = node.children().iterator()
+        while it.hasNext():
+            stack.append(it.next())
+    assert filters
+    for f in filters:
+        assert "lambdafunction" not in f and "size(" not in f, f

@@ -503,3 +503,35 @@ def test_coercion_matrix_property(spark, target, coerce, kind, data):
             assert viol is not None, f"{ctx}: expected {code}, got ok({out!r})"
             assert viol["code"] == code, f"{ctx}: {viol['code']} != {code}"
             assert viol["message"] == msg, f"{ctx}: {viol['message']!r}"
+
+
+def _cross_path_schemas():
+    s = schema()
+    yield s.string().min_length(2).max_length(12)
+    yield s.string().pattern(r"^[a-zA-Z0-9._%+-]+$")
+    yield s.string().email()
+    yield s.string().trim().to_lowercase().url()
+    yield s.string().transform(lambda v: v[::-1]).pattern(r"^[a-z]")
+    yield s.string().min_length(3).pattern("^a").set_message("CUSTOM", "custom message")
+
+
+@given(_TEXTS)
+@settings(**_SETTINGS)
+def test_string_checks_agree_across_tabular_and_json(spark, values):
+    """Both paths run the same value checks: for a non-null string, the
+    tabular `apply` and `validate_json_objects` on {"f": v} give the same
+    value and the same (code, message, error_type) rows."""
+    df = spark.createDataFrame([(i, v) for i, v in enumerate(values)], "i long, f string")
+    js = spark.createDataFrame(
+        [(i, json.dumps({"f": v})) for i, v in enumerate(values)], "i long, j string"
+    )
+    for sch in _cross_path_schemas():
+        obj = schema().object().field("f", sch)
+        rows = [
+            {
+                r["i"]: (r["f"], [(v["code"], v["message"], v["error_type"]) for v in r["violations"]])
+                for r in out.select("i", "f", "violations").collect()
+            }
+            for out in (ValidationPlan(obj).apply(df), validate_json_objects(js, "j", obj))
+        ]
+        assert rows[0] == rows[1]

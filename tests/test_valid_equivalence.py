@@ -46,3 +46,40 @@ def test_valid_matches_violations_with_nulls_and_coercion(spark):
     _assert_equiv(out)
     got = {r["id"]: r["valid"] for r in out.collect()}
     assert got == {0: True, 1: False, 2: False, 3: True}
+
+
+def test_valid_matches_violations_json(spark):
+    """The JSON path builds `valid` from the same pass flags, ANDed with its
+    row-level guards: every row kind of test_json.py, one row each."""
+    from schema_validator_spark import validate_json_objects
+
+    ok = '"name":"Al","age":1,"flag":true,"kind":"tuna","a":1,"b":2'
+    docs = {
+        "unparseable": "not json",
+        "non_object": "[1,2]",
+        "nested": '{' + ok + ',"extra":{"x":1}}',
+        "absent_key": '{"age":1,"flag":true,"kind":"tuna","a":1,"b":2}',
+        "null_required": '{' + ok.replace('"Al"', "null") + '}',
+        "null_optional": '{' + ok.replace('"age":1', '"age":null') + '}',
+        "coerced_bool_null": '{' + ok.replace('"flag":true', '"flag":null') + '}',
+        "literal_mismatch": '{' + ok.replace('"tuna"', '"salmon"') + '}',
+        "failing_check": '{' + ok.replace('"a":1', '"a":9') + '}',
+        "ok": '{' + ok + '}',
+    }
+    s, c = schema(), schema().coerce()
+    obj = (
+        s.object()
+        .field("name", s.string().min_length(2))
+        .field("age", s.number().optional())
+        .field("flag", c.boolean())
+        .field("kind", s.literal("tuna"))
+        .field("a", s.number().optional())
+        .field("b", s.number())
+        .check("a_lt_b", F.col("a") < F.col("b"))
+    )
+    df = spark.createDataFrame(list(docs.items()), "id string, j string")
+    out = validate_json_objects(df, "j", obj)
+    _assert_equiv(out)
+    got = {r["id"]: r["valid"] for r in out.collect()}
+    passing = {"null_optional", "coerced_bool_null", "ok"}
+    assert got == {k: k in passing for k in docs}

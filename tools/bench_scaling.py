@@ -281,7 +281,7 @@ core fed at sandbox data sizes).
 
 The r1→r2 bench deltas on the three sub-5s ANN queries (minhash_fast
 2.47→3.13s, simhash_fast 2.92→3.87s, cosine_topk 0.68→0.87s, same sf0.1
-data) were investigated with a code-level A/B (tools/regress_probe.py): the
+data) were investigated with a code-level fresh-JVM A/B: the
 r1 code run today, in the same fresh-JVM environment, measures
 minhash 3.27/3.86/3.88s across three whole-suite repeats — i.e. the spread
 BETWEEN identical runs (~±25-30%, GC/clock/page-cache state) exceeds the
